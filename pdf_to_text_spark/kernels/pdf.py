@@ -1942,12 +1942,22 @@ class _Translate:
     Used when a font names a base encoding (/WinAnsiEncoding,
     /MacRomanEncoding) with NO /Differences and no narrow /ToUnicode —
     the common declared-encoding case — so the hot path stays a
-    two-pass C operation instead of a per-char dict lookup."""
+    two-pass C operation instead of a per-char dict lookup. When the
+    table overrides no ASCII code (WinAnsi, MacRoman), an ASCII string
+    skips the translate."""
 
-    __slots__ = ("table",)
+    __slots__ = ("table", "decode")
 
     def __init__(self, table: dict):
         self.table = table
+        if min(table, default=0x80) >= 0x80:
+            def decode(b: bytes) -> str:
+                s = b.decode("latin-1")
+                return s if b.isascii() else s.translate(table)
+        else:
+            def decode(b: bytes) -> str:
+                return b.decode("latin-1").translate(table)
+        self.decode = decode
 
 
 def _base_encoding_overrides(name: str) -> dict[int, str] | None:
@@ -2279,35 +2289,64 @@ def _parse_tounicode(cmap: bytes) -> tuple[dict[int, str], dict[int, str]]:
 
 # ── content-stream text extraction ───────────────────────────────────────────
 
-# Regex-driven tokenizer for content streams: one C-level match per token
-# instead of per-byte Python stepping (~4× on megabyte streams). Literal
-# strings take the regex fast path when they contain no nested parens;
-# the slow path falls back to the exact _Lexer parser, so semantics are
-# byte-identical to the reference rules either way.
+# The content-stream grammar, as one sweep pattern. Each match is
+# whitespace/comments followed by at most one INSTRUCTION: either a fused
+# run of tokens that ends in an operator, or a single token.
+#
+# Invariant: every fused alternative matches exactly the token sequence
+# the single-token alternatives below would produce from the same
+# position — the same lexeme boundaries, with an operator that is a
+# whole regular token — and the sweep applies exactly the state change
+# that sequence would. The fused forms are the dominant text
+# instructions:
+#   * ``(literal) Tj`` — a nested-paren-free literal, then Tj: show it;
+#   * ``num num Td|TD`` — flush when ty (the last operand) is negative;
+#   * ``BT`` / ``T*`` — flush.
+# Every operator resets the operand state, so a fused instruction needs
+# no operand it did not match. Anything the fused forms do not cover
+# (arrays/TJ, ' and ", Tf, Do, hex strings, BI … ID … EI, nested-paren
+# literals, stray delimiters) falls through to the single-token
+# alternatives. Sub-patterns are unrolled and possessive: each matches
+# its lexeme in one pass with no backtracking. Numbers inside fused forms
+# take at most 16 integer digits; a longer integer, which int() may
+# refuse, goes through the single-token path and raises there.
+_WS = rb"(?:[\x00\t\n\x0c\r ]++|%[^\r\n]*+)*+"          # ws + comments
+_LIT_BODY = rb"[^()\\]*+(?:\\.[^()\\]*+)*+"            # no nested parens
+_FNUM = rb"[+-]?+(?:\d{1,16}+(?:\.\d*+)?+|\.\d++)(?![\d.])"
+_OP_END = rb"(?![^\x00\t\n\x0c\r ()<>\[\]{}/%])"        # whole regular token
 _CTOK_RE = re.compile(
-    rb"""(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)*+  # ws/comments folded into every
-                                       # token (halves hot-loop iterations)
-    (?: (?P<str>\((?:[^()\\]|\\.)*\))  # literal string, no nested parens
-      | (?P<strop>\()                  # literal string needing full parse
-      | <<                             # dict open (operand soup; skipped)
-      | >>
-      | (?P<hex><[^>]*>)               # hex string
-      | (?P<arro>\[) | (?P<arrc>\])
-      | (?P<name>/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*)  # name
-      | (?P<num>[+-]?(?:\d+\.?\d*|\.\d+))
-      | (?P<brace>[{}])                # PostScript-calculator braces (type-4
-                                       # function bodies): explicit no-op
-      | (?P<op>[^\x00\t\n\x0c\r ()<>\[\]{}/%]+)
-    )?
-    """,
-    re.VERBOSE,
+    _WS
+    # a literal, fused with a following Tj when there is one
+    + rb"(?:\((?P<str>" + _LIT_BODY + rb")\)(?:" + _WS + rb"(?P<tj>Tj)" + _OP_END + rb")?+"
+    + rb"|" + _FNUM + _WS + rb"(?P<td>" + _FNUM + rb")" + _WS + rb"T[dD]" + _OP_END
+    + rb"|(?P<bt>BT|T\*)" + _OP_END
+    + rb"|(?P<strop>\()"                 # literal with nested parens: _Lexer
+    + rb"|<<"                           # dict open (operand soup; skipped)
+    + rb"|(?P<hex><[^>]*+>)"
+    + rb"|(?P<arro>\[)|(?P<arrc>\])"
+    + rb"|(?P<name>/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*+)"
+    + rb"|(?P<num>[+-]?+(?:\d++\.?+\d*+|\.\d++))"
+    + rb"|(?P<op>[^\x00\t\n\x0c\r ()<>\[\]{}/%]++)"
+    # no-op byte: >> and { } (PostScript-calculator braces), and stray
+    # ) > or an unterminated <
+    + rb"|[\s\S])?"
 )
-
-# group indices for the int-dispatch hot loop in _extract_page_text
 _CTOK_GI = tuple(
     _CTOK_RE.groupindex[g]
-    for g in ("str", "strop", "hex", "arro", "arrc", "name", "num", "brace", "op")
+    for g in ("tj", "td", "bt", "str", "strop", "hex", "arro", "arrc", "name", "num", "op")
 )
+
+# operators the sweep acts on besides the fused forms; any other operator
+# only resets the operand state
+_OP_FLUSH, _OP_TD, _OP_TJ, _OP_TJ_ARRAY, _OP_QUOTE, _OP_TF, _OP_DO, _OP_ID = range(8)
+_OPS = {
+    b"BT": _OP_FLUSH, b"T*": _OP_FLUSH, b"Td": _OP_TD, b"TD": _OP_TD,
+    b"Tj": _OP_TJ, b"TJ": _OP_TJ_ARRAY, b"'": _OP_QUOTE, b'"': _OP_QUOTE,
+    b"Tf": _OP_TF, b"Do": _OP_DO, b"ID": _OP_ID,
+}
+
+_NAME_ESC_RE = re.compile(rb"#([0-9A-Fa-f]{2})")
+_HEX_WS_RE = re.compile(rb"[\x00\t\n\x0c\r ]")
 
 # inline-image payload terminator (§8.9.7): EI preceded by whitespace and
 # followed by a token boundary. The binary payload between ID and EI must
@@ -2344,6 +2383,56 @@ def _unescape_literal(body: bytes) -> bytes:
     return _STR_ESCAPE_RE.sub(sub, body)
 
 
+def _decode_latin1(b: bytes) -> str:
+    return b.decode("latin-1")
+
+
+def _show_decoder(m):
+    """bytes → text for show strings under one font map (a value of
+    PDFDocument.page_extraction_context's font dict, or None)."""
+    if m is None:
+        return _decode_latin1
+    t = type(m)
+    if t is _Translate:  # declared base encoding
+        return m.decode
+    if t is _UnsupportedCMap:
+        def unsupported(b: bytes) -> str:
+            raise PDFUnsupportedCMapError(
+                f"text shown through predefined CID CMap /{m.name} "
+                "without ToUnicode"
+            )
+        return unsupported
+    # NUL codes (a 0x00 show byte is VALID in the legacy codespaces and
+    # UTF-16BE) must not put raw \x00 into the extracted-text surface —
+    # same contract as the _UniWideMap branch below
+    if t is _Utf16BEMap:  # Uni*-UCS2/UTF16: codes ARE Unicode
+        return lambda b: b.decode("utf-16-be", "replace").replace("\x00", "�")
+    if t is _LegacyCodecMap:  # GBK-EUC/RKSJ/…: codes ARE the codec's
+        codec = m.codec
+        return lambda b: b.decode(codec, "replace").replace("\x00", "�")
+    get = m.get
+    if t is _UniWideMap:  # Uni* cmap + partial ToUnicode
+        # `is None`, not `or`: an explicit empty ToUnicode mapping must
+        # stay blank; unmapped codes ARE the Unicode value, and NUL
+        # (code 0) and surrogate halves degrade to U+FFFD
+        return lambda b: "".join(
+            v
+            if (v := get(c)) is not None
+            else (chr(c) if c and not 0xD800 <= c <= 0xDFFF else "�")
+            for i in range(0, len(b) - 1, 2)
+            for c in ((b[i] << 8) | b[i + 1],)
+        )
+    if t is _WideMap:  # Type0: consume 2-byte CIDs
+        return lambda b: "".join(
+            get((b[i] << 8) | b[i + 1], "�") for i in range(0, len(b) - 1, 2)
+        )
+    tbl = _LATIN1_TABLE
+    # `is None`, not truthiness: Symbol maps its decorative extender and
+    # radicalex codes to EMPTY, and `get(x) or tbl[x]` would resurrect
+    # latin-1 for them
+    return lambda b: "".join(c if (c := get(x)) is not None else tbl[x] for x in b)
+
+
 def _extract_page_text(
     content: bytes,
     fonts: dict[str, dict[int, str]] | None = None,
@@ -2352,181 +2441,164 @@ def _extract_page_text(
 ) -> str:
     """Apply the pinned reflow rules (module docstring) to one content stream.
 
-    `fonts` maps a resource font name (e.g. "F1") to a /Differences
-    code→char override; when None or the current font has no override,
-    strings decode latin-1 (the pinned fast path — byte-identical to the
-    pre-Differences kernel).
+    `fonts` maps a resource font name (e.g. "F1") to its code→text map
+    (see _show_decoder); with no map for the current font, strings
+    decode latin-1 (the pinned default).
 
     `xobjects` maps a resource XObject name to a (content, fonts,
     xobjects) triple for /Subtype /Form streams; a `Do` of such a name
     recurses (pdfjs's getTextContent does the same — text drawn inside
     form XObjects is real page text, reference main.ts:149-150). Depth-
-    and cycle-guarded; image XObjects never appear in the map."""
+    and cycle-guarded; image XObjects never appear in the map.
+
+    One _CTOK_RE sweep per stream (see the invariant above it). Only a
+    nested-paren literal and an inline image move the cursor by other
+    means; the sweep restarts after them."""
     lines: list[str] = []
     cur: list[str] = []
+    # operand state since the last operator
     last_str: bytes | None = None   # most recent string operand
     last_num: float | None = None   # most recent numeric operand
-    last_name: str | None = None    # most recent name operand (for Tf)
-    arr: list | None = None         # open TJ-style array, or None
-    arr_strs: list[bytes] = []
-    cur_map: dict[int, str] | None = None  # active font's code overrides
+    last_name: str | None = None    # most recent name operand (Tf, Do)
+    in_arr = False                  # inside a TJ-style array
+    arr_strs: list[bytes] | tuple = ()  # strings of the last array
+    decode = _decode_latin1         # show decoder of the current font
 
-    def dec(b: bytes) -> str:
-        if cur_map is None:
-            return b.decode("latin-1")
-        m = cur_map
-        if type(m) is _UnsupportedCMap:
-            raise PDFUnsupportedCMapError(
-                f"text shown through predefined CID CMap /{m.name} "
-                "without ToUnicode"
-            )
-        # NUL codes (a 0x00 show byte is VALID in the legacy codespaces
-        # and UTF-16BE) must not put raw \x00 into the extracted-text
-        # surface — same contract as the _UniWideMap branch below
-        # (r6 fuzz finding)
-        if type(m) is _Utf16BEMap:  # Uni*-UCS2/UTF16: codes ARE Unicode
-            return b.decode("utf-16-be", "replace").replace("\x00", "�")
-        if type(m) is _LegacyCodecMap:  # GBK-EUC/RKSJ/…: codes ARE the
-            return b.decode(m.codec, "replace").replace("\x00", "�")
-        if type(m) is _Translate:  # declared WinAnsi/MacRoman base
-            return b.decode("latin-1").translate(m.table)
-        if type(m) is _UniWideMap:  # Uni* cmap + partial ToUnicode:
-            # `is None`, not `or`: an explicit empty ToUnicode mapping
-            # must stay blank (same falsy bug as the single-byte path
-            # below); NUL (code 0) degrades to U+FFFD — raw \x00 must
-            # never reach the golden/oracle text surface (r6 review)
-            return "".join(  # unmapped codes ARE the Unicode value
-                v
-                if (v := m.get(c)) is not None
-                else (chr(c) if c and not 0xD800 <= c <= 0xDFFF else "�")
-                for i in range(0, len(b) - 1, 2)
-                for c in ((b[i] << 8) | b[i + 1],)
-            )
-        if type(m) is _WideMap:  # Type0: consume 2-byte CIDs
-            return "".join(
-                m.get((b[i] << 8) | b[i + 1], "�")
-                for i in range(0, len(b) - 1, 2)
-            )
-        t = _LATIN1_TABLE
-        # `is None` check, not truthiness: Symbol maps its decorative
-        # extender/radicalex codes to EMPTY, and `m.get(x) or t[x]`
-        # silently resurrected latin-1 for them (second r6 review)
-        return "".join(c if (c := m.get(x)) is not None else t[x] for x in b)
-
-    def flush() -> None:
-        if cur:
-            lines.append("".join(cur))
-            cur.clear()
-
-    n = len(content)
+    GI_TJ, GI_TD, GI_BT, GI_STR, GI_STROP, GI_HEX, GI_ARRO, GI_ARRC, GI_NAME, GI_NUM, GI_OP = _CTOK_GI
+    sweep = _CTOK_RE.finditer
+    ops = _OPS
     pos = 0
-    # hot loop: int dispatch on m.lastindex (group numbers, see _CTOK_GI)
-    # instead of string-comparing m.lastgroup — one C-level match + one
-    # int compare chain per token, ordered by token frequency
-    match = _CTOK_RE.match
-    GI_STR, GI_STROP, GI_HEX, GI_ARRO, GI_ARRC, GI_NAME, GI_NUM, GI_BRACE, GI_OP = _CTOK_GI
-    while pos < n:
-        m = match(content, pos)
-        end = m.end()
-        if end == pos:  # stray delimiter the grammar rejects — skip one byte
-            pos += 1
-            continue
-        pos = end
-        gi = m.lastindex
-        if gi is None:  # trailing ws / comment / << >>
-            continue
-        if gi == GI_NUM:
-            tok = m.group(GI_NUM)
-            last_num = float(tok) if (b"." in tok) else int(tok)
-            continue
-        if gi == GI_STR:
-            s = _unescape_literal(m.group(GI_STR)[1:-1])
-            if arr is not None:
-                arr_strs.append(s)
-            last_str = s
-        elif gi == GI_NAME:
-            raw_name = m.group(GI_NAME)[1:]
-            if b"#" in raw_name:
-                # #xx escapes are legal in ANY name, including operands —
-                # resource-dict keys are unescaped by _Lexer._parse_name,
-                # so an escaped /F#31 Tf must also resolve to 'F1' or the
-                # font/XObject lookup silently misses (r3 review)
-                raw_name = re.sub(
-                    rb"#([0-9A-Fa-f]{2})",
-                    lambda mm: bytes([int(mm.group(1), 16)]),
-                    raw_name,
-                )
-            last_name = raw_name.decode("latin-1")
-            continue
-        elif gi == GI_STROP:
-            lx = _Lexer(content, m.start(GI_STROP))
-            s = lx._parse_literal_string()
-            pos = lx.pos
-            if arr is not None:
-                arr_strs.append(s)
-            last_str = s
-        elif gi == GI_HEX:
-            digits = re.sub(rb"[\x00\t\n\x0c\r ]", b"", m.group(GI_HEX)[1:-1])
-            if len(digits) % 2:
-                digits += b"0"
-            try:
-                s = bytes.fromhex(digits.decode("ascii"))
-            except ValueError:
+    while True:
+        for m in sweep(content, pos):
+            gi = m.lastindex
+            if gi == GI_TJ:
+                s = m[GI_STR]
+                cur.append(decode(_unescape_literal(s) if b"\\" in s else s))
+            elif gi == GI_TD:
+                if float(m[GI_TD]) < 0 and cur:
+                    lines.append("".join(cur))
+                    cur.clear()
+            elif gi == GI_BT:
+                if cur:
+                    lines.append("".join(cur))
+                    cur.clear()
+            elif gi == GI_OP:
+                k = ops.get(m[GI_OP])
+                if k is None:
+                    pass
+                elif k == _OP_FLUSH:
+                    if cur:
+                        lines.append("".join(cur))
+                        cur.clear()
+                elif k == _OP_TD:
+                    if last_num is not None and last_num < 0 and cur:
+                        lines.append("".join(cur))
+                        cur.clear()
+                elif k == _OP_TJ:
+                    if last_str is not None:
+                        cur.append(decode(last_str))
+                elif k == _OP_TJ_ARRAY:
+                    for s in arr_strs:
+                        cur.append(decode(s))
+                elif k == _OP_QUOTE:
+                    if cur:
+                        lines.append("".join(cur))
+                        cur.clear()
+                    if last_str is not None:
+                        cur.append(decode(last_str))
+                elif k == _OP_TF:
+                    if fonts is not None:
+                        decode = _show_decoder(
+                            fonts.get(last_name) if last_name is not None else None
+                        )
+                elif k == _OP_DO:
+                    if xobjects is not None and last_name is not None:
+                        sub = xobjects.get(last_name)
+                        if sub is not None and depth < _MAX_FORM_DEPTH:
+                            # form text is emitted in stream order at the
+                            # Do site; the form's own BT blocks would flush
+                            # anyway, and the caller's text state is
+                            # untouched by the recursion
+                            if cur:
+                                lines.append("".join(cur))
+                                cur.clear()
+                            sub_text = _extract_page_text(sub[0], sub[1], sub[2], depth + 1)
+                            if sub_text:
+                                lines.extend(sub_text.split("\n"))
+                else:  # _OP_ID
+                    # inline image (BI … ID <binary> EI): skip the payload
+                    # to the whitespace-delimited EI so image bytes never
+                    # reach the sweep; fall back to a bare token-boundary
+                    # EI for writers whose payload abuts the delimiter
+                    end = m.end()
+                    m2 = _EI_RE.search(content, end) or _EI_BARE_RE.search(content, end)
+                    pos = m2.end() if m2 is not None else len(content)
+                    last_str = last_num = last_name = None
+                    in_arr = False
+                    arr_strs = ()
+                    break
+                # BX/EX compatibility sections are explicit no-ops: they
+                # only toggle unknown-operator tolerance, which this
+                # lenient sweep already has
+            elif gi == GI_NUM:
+                tok = m[GI_NUM]
+                last_num = float(tok) if b"." in tok else int(tok)
                 continue
-            if arr is not None:
-                arr_strs.append(s)
-            last_str = s
-        elif gi == GI_ARRO:
-            arr = []
-            arr_strs = []
-        elif gi == GI_ARRC:
-            arr = None
-        elif gi == GI_OP:
-            op = m.group("op")
-            if op == b"BT" or op == b"T*":
-                flush()
-            elif op in (b"Td", b"TD"):
-                if isinstance(last_num, (int, float)) and last_num < 0:
-                    flush()
-            elif op == b"Tj":
-                if last_str is not None:
-                    cur.append(dec(last_str))
-            elif op == b"TJ":
-                for s in arr_strs:
-                    cur.append(dec(s))
+            elif gi == GI_STR:
+                s = _unescape_literal(m[GI_STR])
+                if in_arr:
+                    arr_strs.append(s)
+                last_str = s
+                continue
+            elif gi == GI_NAME:
+                raw_name = m[GI_NAME][1:]
+                if b"#" in raw_name:
+                    # #xx escapes are legal in ANY name, including operands
+                    # — resource-dict keys are unescaped by
+                    # _Lexer._parse_name, so an escaped /F#31 Tf must also
+                    # resolve to 'F1' or the font/XObject lookup misses
+                    raw_name = _NAME_ESC_RE.sub(
+                        lambda mm: bytes([int(mm.group(1), 16)]), raw_name
+                    )
+                last_name = raw_name.decode("latin-1")
+                continue
+            elif gi is None:  # ws / comment / no-op byte
+                continue
+            elif gi == GI_HEX:
+                digits = _HEX_WS_RE.sub(b"", m[GI_HEX][1:-1])
+                if len(digits) % 2:
+                    digits += b"0"
+                try:
+                    s = bytes.fromhex(digits.decode("ascii"))
+                except ValueError:
+                    continue
+                if in_arr:
+                    arr_strs.append(s)
+                last_str = s
+                continue
+            elif gi == GI_ARRO:
+                in_arr = True
                 arr_strs = []
-            elif op == b"'" or op == b'"':
-                flush()
-                if last_str is not None:
-                    cur.append(dec(last_str))
-            elif op == b"Tf" and fonts is not None:
-                cur_map = fonts.get(last_name) if last_name is not None else None
-            elif op == b"Do" and xobjects is not None and last_name is not None:
-                sub = xobjects.get(last_name)
-                if sub is not None and depth < _MAX_FORM_DEPTH:
-                    # form text is emitted in stream order at the Do site;
-                    # the form's own BT blocks would flush anyway, and the
-                    # caller's text state is untouched by the recursion
-                    flush()
-                    sub_text = _extract_page_text(sub[0], sub[1], sub[2], depth + 1)
-                    if sub_text:
-                        lines.extend(sub_text.split("\n"))
-            elif op == b"ID":
-                # inline image (BI … ID <binary> EI): skip the payload to
-                # the whitespace-delimited EI so image bytes never reach
-                # the tokenizer; fall back to a bare token-boundary EI for
-                # writers whose payload abuts the delimiter
-                m2 = _EI_RE.search(content, pos) or _EI_BARE_RE.search(content, pos)
-                pos = m2.end() if m2 is not None else n
-            # BX/EX compatibility sections are explicit no-ops: they only
-            # toggle unknown-operator tolerance, which this lenient
-            # tokenizer already has
-            last_str = None
-            last_num = None
-            last_name = None
-            arr = None
-            arr_strs = []
-    flush()
+                continue
+            elif gi == GI_ARRC:
+                in_arr = False
+                continue
+            else:  # GI_STROP
+                lx = _Lexer(content, m.start(GI_STROP))
+                s = lx._parse_literal_string()
+                pos = lx.pos
+                if in_arr:
+                    arr_strs.append(s)
+                last_str = s
+                break
+            # every operator, fused or not, consumes the operand state
+            last_str = last_num = last_name = None
+            in_arr = False
+            arr_strs = ()
+        else:
+            break
+    if cur:
+        lines.append("".join(cur))
     return "\n".join(lines)
 
 

@@ -715,14 +715,13 @@ def simhash_near_pairs(
         F.col("a.simhash").alias("sh_a"),
         F.col("b.simhash").alias("sh_b"),
     )
-    # hamming filter BEFORE the distinct (r7, guide §2.3 "shuffle fewer
-    # bytes"): on a near-dup-heavy corpus identical simhashes co-bucket
-    # in all 4 bands, so the band join emits ~16M candidate rows at the
-    # 50k-doc bench scale while <0.1% survive hamming ≤ 3 — filtering is
-    # a map-side XOR+popcount in the join stage, and the dedup exchange
-    # then carries only survivors. Identical results: hamming is a
-    # function of the pair (one signature per doc), so filter and
-    # distinct commute.
+    # hamming is computed once and the distinct runs over (doc_a, doc_b,
+    # hamming): 3 longs per exchanged row instead of (doc_a, doc_b, sh_a,
+    # sh_b). Catalyst pushes the `hamming <= max_hamming` filter into the
+    # band join's condition whether it is written before or after the
+    # distinct, so only survivors reach the distinct exchange either way.
+    # Identical results: hamming is a function of the pair (one signature
+    # per doc), so filter and distinct commute.
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
     return (
         cand.withColumn("hamming", hamming)

@@ -40,14 +40,15 @@ def dedup_latest_by_url(pages: DataFrame) -> DataFrame:
 
 
 # Broadcast ceiling for the prefilter dedup strategy: the duplicated-url
-# relation is collect()ed and re-broadcast when it has at most this many
-# rows. Driver-memory honesty (r4 review): at the cap that is ~1 GB peak,
-# not the naive 100 B/row — CPython Row objects cost ~300-500 B each and
-# _dedup_prefilter materializes a second (url, ts) tuple list before
-# createDataFrame. Size the driver accordingly (the default 8g config
-# clears it 8×). Crawl dup rates run ~2%, so the cap covers ~50M-doc
-# corpora; beyond it run_extraction falls back to the window strategy
-# (which still shuffles only extracted kilobyte rows, never payloads).
+# relation is collected to the driver as an Arrow table and re-broadcast
+# when it has at most this many rows. Driver memory at the cap: the
+# collected (url, _max_ts, _n, _tie_free) columns cost the url bytes plus
+# ~20 B per row in Arrow buffers (~100 MB for crawl-length urls), and
+# createDataFrame hands the JVM one more copy of (url, _max_ts) — no
+# per-row Python objects. Crawl dup rates run ~2%, so the cap covers
+# ~50M-doc corpora; beyond it run_extraction falls back to the window
+# strategy (which still shuffles only extracted kilobyte rows, never
+# payloads).
 PREFILTER_MAX_DUP_URLS = 1_000_000
 
 
@@ -83,17 +84,19 @@ def dup_url_stats(pages: DataFrame) -> DataFrame:
     return agg.where(F.col("_n") > 1).select("url", "_max_ts", "_n", "_tie_free")
 
 
-def _dedup_prefilter(pages: DataFrame, dup_rows) -> DataFrame:
+def _dedup_prefilter(pages: DataFrame, dup) -> DataFrame:
     """Drop superseded crawls via a broadcast anti-filter — zero payload
-    shuffle. `dup_rows` is the collected dup_url_stats result (driver-side
-    list of Rows, size-capped by the caller); every row must be _tie_free
-    (no exact (url, warc_ts) collisions — those need the window).
-    """
+    shuffle. `dup` is the collected dup_url_stats result (a pyarrow Table,
+    size-capped by the caller); every row must be _tie_free (no exact
+    (url, warc_ts) collisions — those need the window).
+
+    The table goes back to Spark as Arrow, so the broadcast side is a
+    LocalTableScan (no job, no Python worker) and each _max_ts keeps the
+    exact instant collected: a Python datetime would pass through the
+    driver's local zone, where a fall-back DST hour is ambiguous and the
+    eqNullSafe below would then drop every crawl of the url."""
     spark = pages.sparkSession
-    dup = spark.createDataFrame(
-        [(r["url"], r["_max_ts"]) for r in dup_rows],
-        "url string, _max_ts timestamp",
-    )
+    dup = spark.createDataFrame(dup.select(["url", "_max_ts"]))
     return (
         pages.join(F.broadcast(dup), "url", "left_outer")
         .where(F.col("_max_ts").isNull() | F.col("warc_ts").eqNullSafe(F.col("_max_ts")))
@@ -177,15 +180,19 @@ def run_extraction(
 
     post_window = False
     if dedup and dedup_strategy != "window":
+        import pyarrow.compute as pc
+
         # cap+1 so overflow is detectable without counting the full set
-        dup_rows = dup_url_stats(df).limit(PREFILTER_MAX_DUP_URLS + 1).collect()
-        broadcastable = len(dup_rows) <= PREFILTER_MAX_DUP_URLS
+        dup = dup_url_stats(df).limit(PREFILTER_MAX_DUP_URLS + 1).toArrow()
+        broadcastable = dup.num_rows <= PREFILTER_MAX_DUP_URLS
         # ties need the window; so does a duplicated NULL url (join keys
         # never match NULL, so the filter could not drop its extra rows)
-        tie_free = all(r["_tie_free"] and r["url"] is not None for r in dup_rows)
+        tie_free = dup["url"].null_count == 0 and bool(
+            pc.all(dup["_tie_free"], skip_nulls=False, min_count=0).as_py()
+        )
         if broadcastable and tie_free:
-            if dup_rows:
-                df = _dedup_prefilter(df, dup_rows)
+            if dup.num_rows:
+                df = _dedup_prefilter(df, dup)
             # else: no duplicated urls at all — dedup is a no-op
         elif dedup_strategy == "prefilter":
             # when the cap overflowed, tie_free was computed over the
@@ -197,7 +204,7 @@ def run_extraction(
             )
             raise ValueError(
                 "dedup_strategy='prefilter' needs a broadcastable, "
-                f"collision-free dup-url set (got {len(dup_rows)} dup urls, "
+                f"collision-free dup-url set (got {dup.num_rows} dup urls, "
                 f"{tie_msg}); use 'window' or 'auto'"
             )
         else:

@@ -173,6 +173,83 @@ def test_lzw_spec_vector():
     assert _lzw_decode(wire) == src
 
 
+def _reference_lzw_encode(data: bytes, early: int = 1) -> bytes:
+    """The straightforward LZW encoder (bytes-keyed table, one growing
+    prefix rebuilt per input byte) that tools.make_pdf.lzw_encode must
+    match code for code."""
+    out = bytearray()
+    buf = 0
+    bits = 0
+    width = 9
+
+    def emit(code: int) -> None:
+        nonlocal buf, bits
+        buf = (buf << width) | code
+        bits += width
+        while bits >= 8:
+            bits -= 8
+            out.append((buf >> bits) & 0xFF)
+        buf &= (1 << bits) - 1
+
+    table: dict[bytes, int] = {bytes([i]): i for i in range(256)}
+    next_code = 258
+    emit(256)  # clear
+    w = b""
+    for ch in data:
+        wc = w + bytes([ch])
+        if wc in table:
+            w = wc
+            continue
+        emit(table[w])
+        if next_code >= 4095:  # table full: clear and restart
+            emit(256)
+            table = {bytes([i]): i for i in range(256)}
+            next_code = 258
+            width = 9
+        else:
+            table[wc] = next_code
+            next_code += 1
+            # the decoder's table lags the encoder's by exactly one entry
+            # (its first post-clear code adds none), so the encoder widens
+            # one entry later than its own next_code would suggest
+            if next_code - 1 >= (1 << width) - early and width < 12:
+                width += 1
+        w = bytes([ch])
+    if w:
+        emit(table[w])
+    emit(257)  # EOD
+    if bits:
+        out.append((buf << (8 - bits)) & 0xFF)
+    return bytes(out)
+
+
+def test_lzw_encode_matches_reference_encoder():
+    """Byte-identical output to the reference encoder on inputs that
+    fill and clear the code table several times (~20 KB of random bytes
+    per case; one table holds < 8 KB of them) and mix in single-byte
+    runs long enough to outgrow the table's longest run entry."""
+    import random
+
+    from tools.make_pdf import lzw_encode
+
+    rng = random.Random(20240)
+    cases = [b"", b"a", b"aa", b"ab" * 3000, b"\x00" * 40_000]
+    for _ in range(4):
+        parts = []
+        while sum(map(len, parts)) < 60_000:
+            k = rng.random()
+            if k < 0.35:
+                parts.append(bytes([rng.randrange(256)]) * rng.randint(1, 4000))
+            elif k < 0.7:
+                parts.append(rng.randbytes(rng.randint(1, 3000)))
+            else:
+                parts.append(bytes(rng.choice(b"ab ") for _ in range(rng.randint(1, 800))))
+        cases.append(b"".join(parts))
+    for data in cases:
+        for early in (0, 1):
+            assert lzw_encode(data, early) == _reference_lzw_encode(data, early)
+
+
 def test_xref_stream_equals_classic_layout():
     """The same pages through a classic-xref PDF, an xref-stream PDF, and
     an ObjStm-packed PDF must extract identically."""

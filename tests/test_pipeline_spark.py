@@ -370,6 +370,41 @@ def test_dedup_prefilter_keeps_latest_and_null_ts(spark):
     assert got == win
 
 
+def test_dedup_prefilter_exact_in_ambiguous_local_hour(spark, monkeypatch):
+    """The newest crawl falls in the hour a DST fall-back repeats on the
+    driver's local clock (America/New_York, 2024-11-03: 06:30Z is the
+    second 01:30). The prefilter compares each crawl with the collected
+    newest instant, so that instant must come back exact: auto keeps the
+    url, as the window does."""
+    import time
+
+    utc = dt.timezone.utc
+    df = spark.createDataFrame(
+        [
+            ("u1", dt.datetime(2024, 11, 3, 4, 0, tzinfo=utc), b"older", None, "en"),
+            ("u1", dt.datetime(2024, 11, 3, 6, 30, tzinfo=utc), b"newest", None, "en"),
+            ("u2", dt.datetime(2024, 11, 3, 6, 30, tzinfo=utc), b"single", None, "en"),
+        ],
+        schema=PAGES_SCHEMA,
+    )
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        def kept(strategy):
+            out = run_extraction(df, dedup_strategy=strategy)
+            return sorted(
+                (r["url"], r["us"])
+                for r in out.select("url", F.unix_micros("warc_ts").alias("us")).collect()
+            )
+
+        auto, window = kept("auto"), kept("window")
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    newest = int(dt.datetime(2024, 11, 3, 6, 30, tzinfo=utc).timestamp()) * 1_000_000
+    assert auto == window == [("u1", newest), ("u2", newest)]
+
+
 def test_dedup_exact_tie_routes_to_window(spark):
     """An exact (url, warc_ts) collision cannot be broadcast-filtered —
     'prefilter' must refuse loudly, 'auto' must fall back to the window

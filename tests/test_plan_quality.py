@@ -72,6 +72,16 @@ def test_no_payload_shuffle_before_kernel(pages):
         assert "html" not in cols, plan_w
 
 
+def test_prefilter_broadcast_side_is_local(pages):
+    """The collected dup-url set goes back to Spark as Arrow, so the
+    broadcast side is a LocalTableScan: building it runs no job and no
+    Python worker."""
+    from pdf_to_text_spark.operators.extraction import run_extraction
+
+    plan = _plan(run_extraction(pages))  # auto → prefilter on this corpus
+    assert re.search(r"BroadcastExchange \(\d+\)\n\s*\+- LocalTableScan \(\d+\)", plan), plan
+
+
 def test_salted_path_shuffles_by_bucket_and_salt(pages):
     from pdf_to_text_spark.operators.extraction import run_extraction
 

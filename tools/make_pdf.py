@@ -20,7 +20,14 @@ import zlib
 
 def lzw_encode(data: bytes, early: int = 1) -> bytes:
     """PDF LZWDecode-compatible encoder: MSB-first variable-width codes,
-    clear (256) first, EOD (257) last, /EarlyChange width growth."""
+    clear (256) first, EOD (257) last, /EarlyChange width growth.
+
+    Linear time: a multi-byte string is keyed by (prefix code, last
+    byte), so growing the current match is one int-keyed lookup. Runs of
+    one byte advance a whole table entry at a time: the pure runs of a
+    byte in the table are always b, bb, …, b^M (each is added as the
+    longest one plus b), so a run can jump straight to the longest entry
+    it covers."""
     out = bytearray()
     buf = 0
     bits = 0
@@ -35,32 +42,64 @@ def lzw_encode(data: bytes, early: int = 1) -> bytes:
             out.append((buf >> bits) & 0xFF)
         buf &= (1 << bits) - 1
 
-    table: dict[bytes, int] = {bytes([i]): i for i in range(256)}
+    table: dict[int, int] = {}      # (prefix << 8) | byte → code, 2+ bytes
+    runs: dict[int, list[int]] = {}  # byte b → codes of b, bb, …, b^M (M ≥ 2)
     next_code = 258
-    emit(256)  # clear
-    w = b""
-    for ch in data:
-        wc = w + bytes([ch])
-        if wc in table:
-            w = wc
-            continue
-        emit(table[w])
+
+    def miss(w: int, ch: int) -> None:
+        """The current match w cannot grow by ch: emit it, add w + ch."""
+        nonlocal table, runs, next_code, width
+        emit(w)
         if next_code >= 4095:  # table full: clear and restart
             emit(256)
-            table = {bytes([i]): i for i in range(256)}
+            table, runs = {}, {}
             next_code = 258
             width = 9
-        else:
-            table[wc] = next_code
-            next_code += 1
-            # the decoder's table lags the encoder's by exactly one entry
-            # (its first post-clear code adds none), so the encoder widens
-            # one entry later than its own next_code would suggest
-            if next_code - 1 >= (1 << width) - early and width < 12:
-                width += 1
-        w = bytes([ch])
-    if w:
-        emit(table[w])
+            return
+        table[(w << 8) | ch] = next_code
+        run = runs.get(ch)
+        if (run[-1] if run else ch) == w:  # w is ch^M, so this is ch^(M+1)
+            if run is None:
+                runs[ch] = run = [ch]
+            run.append(next_code)
+        next_code += 1
+        # the decoder's table lags the encoder's by exactly one entry
+        # (its first post-clear code adds none), so the encoder widens
+        # one entry later than its own next_code would suggest
+        if next_code - 1 >= (1 << width) - early and width < 12:
+            width += 1
+
+    emit(256)  # clear
+    n = len(data)
+    if n:
+        w = data[0]
+        i = 1
+        while i < n:
+            ch = data[i]
+            c = table.get((w << 8) | ch)
+            if c is not None:
+                w = c
+                i += 1
+                continue
+            miss(w, ch)
+            w = ch
+            i += 1
+            if i < n and data[i] == ch:
+                # w is ch^1 and r more ch bytes follow
+                r = re.compile(re.escape(bytes([ch])) + b"+").match(data, i).end() - i
+                while r:
+                    run = runs.get(ch)
+                    m = len(run) if run else 1
+                    if r < m:  # ch^(1+r) is in the table
+                        w = run[r]
+                        i += r
+                        break
+                    # grow to ch^m; the ch after it misses
+                    i += m
+                    r -= m
+                    miss(run[-1] if run else ch, ch)
+                    w = ch
+        emit(w)
     emit(257)  # EOD
     if bits:
         out.append((buf << (8 - bits)) & 0xFF)
